@@ -5,11 +5,11 @@ Reference parity map (operator ids from SURVEY.md §2.A):
 - ``read()``       — A2's routing (CACHED → local read, else remote ± warm-up) and A5's
                      corruption fallback (local failure → invalidate + direct remote read,
                      ``CachedReadRequestChain.java:204-223``)
-- ``warm()``       — A6/A10/A18-A19 read-through + async warm-up: a *distributed*
-                     ``spark.read.parquet(remote).write.parquet(local)`` copy (every
-                     executor copies its split — the Spark analog of the 10-thread
-                     remote-fetch pool, ``FileDownloader.java:194-239``), then a
-                     generation-checked manifest commit (A13)
+- ``warm()``       — A6/A10/A18-A19 read-through + async warm-up: a byte copy of the
+                     remote files (relative paths kept) on a fixed thread pool
+                     (``FileDownloader.java:194-239``), a byte-count check, then a
+                     generation-checked manifest commit (A13); only the row-group
+                     fetch (``_fetch_runs``) still runs as a Spark job
 - staleness        — A16: remote mtime/size vs manifest ⇒ invalidate + new generation
                      (``BookKeeper.java:295-305, 774-777``)
 - generations      — A17: monotonic per-path counter; local dirs carry ``_g<N>`` suffixes
@@ -36,6 +36,7 @@ import re
 import shutil
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -167,12 +168,15 @@ class CacheManager:
         return os.path.join(self.cache_dir, "fcache", f"{sanitized}_g{generation}")
 
     # ------------------------------------------------------------------ warm path
+    COPY_THREADS = 4  # A19's bounded fetch pool: files of one warm copied concurrently
+
     def warm(self, remote_path: str) -> str | None:
         """Materialize a remote parquet file/dir into the local cache; returns local path.
 
-        The copy itself is a distributed Spark job (each executor writes its own split),
-        mirroring the parallel FileDownloader (A19). Returns None when the path is gated
-        out by skip patterns or dummy mode.
+        A byte copy keeping each file's path relative to the remote root (so partition
+        dirs, file split and row groups survive). Returns None when gated out by skip
+        patterns or dummy mode, when the copied bytes differ from the remote size, or
+        when a newer generation won.
         """
         if not self.cacheable(remote_path) or self.dummy:
             return None
@@ -180,11 +184,12 @@ class CacheManager:
         mtime, size = _mtime_size(remote_path)
         gen = self.manifest.next_generation(remote_path)
         local = self._local_dir(remote_path, gen)
-        # one round trip for the copy job's open; the per-split GETs run in parallel
-        # executor tasks, so wall-clock pays ~one more trip, not one per split
-        self._remote_penalty(2 if self.spark is not None else 1)
+        # one round trip for the open; the per-file GETs run in parallel, so
+        # wall-clock pays ~one more trip, not one per file
+        self._remote_penalty(2)
         try:
-            self._materialize(remote_path, local, size)
+            self._materialize(remote_path, local)
+            copied = _mtime_size(local)[1]
         except BaseException:
             # a failed warm (transient remote error, torn read under a concurrent
             # rewrite) must not leak its partial dir: it is in no manifest entry, so
@@ -192,6 +197,11 @@ class CacheManager:
             # would leak disk forever (found by the generated cache schedules, r13)
             shutil.rmtree(local, ignore_errors=True)
             raise
+        if copied != size:
+            # A19 byte check (FileDownloadRequestChain.java:145-150): a copy whose byte
+            # total is not the recorded remote size (a torn read) is never committed
+            shutil.rmtree(local, ignore_errors=True)
+            return None
         committed = self.manifest.put(
             Entry(
                 remote_path=remote_path,
@@ -211,34 +221,18 @@ class CacheManager:
         self.evict_to_budget()
         return local
 
-    def _materialize(self, remote_path: str, local: str, size: int) -> None:
-        if self.spark is not None:
-            # one output file per ~16 MiB of remote data. Two measured failure modes
-            # bound this from both sides: 32 tiny part-files for a small table make the
-            # HIT path as slow as the remote read (r2: warm == cold at sf0.1 before
-            # coalescing), and ONE part-file for a 124 MB table makes every warm scan a
-            # single task (r4 at sf1: the cached star join ran 16.7 s warm because the
-            # fact scan had zero parallelism — Spark splits files by byte range, but a
-            # sub-128MiB file is always one split). 16 MiB keeps small tables at one
-            # file and gives an 8-way scan per 128 MiB; on a cluster it also spreads the
-            # copy across executors.
-            n_parts = max(1, -(-size // (16 * 1024 * 1024)))
-            (
-                self.spark.read.parquet(remote_path)
-                .coalesce(n_parts)
-                .write.mode("overwrite")
-                .parquet(local)
-            )
+    def _materialize(self, remote_path: str, local: str) -> None:
+        """Copy the remote file, or every file under the remote dir, into ``local``."""
+        if os.path.isdir(remote_path):
+            root = remote_path
+            srcs = [os.path.join(r, f) for r, _, fs in os.walk(remote_path) for f in fs]
         else:
-            # sessionless mode (the rubix_cache DataSource planner runs in a python
-            # worker with no SparkSession): whole-file copy instead of a distributed job
-            os.makedirs(local, exist_ok=True)
-            if os.path.isdir(remote_path):
-                for root, _, files in os.walk(remote_path):
-                    for fn in files:
-                        shutil.copy2(os.path.join(root, fn), os.path.join(local, fn))
-            else:
-                shutil.copy2(remote_path, os.path.join(local, os.path.basename(remote_path)))
+            root, srcs = os.path.dirname(remote_path), [remote_path]
+        dsts = [os.path.join(local, os.path.relpath(src, root)) for src in srcs]
+        for d in {local, *map(os.path.dirname, dsts)}:
+            os.makedirs(d, exist_ok=True)
+        with ThreadPoolExecutor(max(1, min(self.COPY_THREADS, len(srcs)))) as pool:
+            list(pool.map(shutil.copy2, srcs, dsts))
 
     # ------------------------------------------------------------------ row-group granularity
     # The reference caches 1 MiB blocks with a per-block bitmap (FileMetadata.java:96-97)
@@ -353,11 +347,11 @@ class CacheManager:
         return local
 
     def _fetch_runs(self, remote_path: str, local: str, runs: list[list[int]]) -> None:
-        """A19's parallel downloader at row-group granularity: each collated run is an
-        independent EXECUTOR task (``FileDownloader.java:194-239`` fans chunks across a
-        thread pool; here the fan-out is a Spark job, so at cluster scale each run is
-        fetched by whichever executor owns the split — the driver never materializes
-        data). Sessionless callers (the DataSource planner worker) fetch inline.
+        """A19's parallel downloader at row-group granularity, and the one warm path run
+        as a Spark job: each collated run is an independent EXECUTOR task (the reference's
+        ``FileDownloader.java:194-239`` fans chunks across a thread pool; at cluster scale
+        each run is fetched by whichever executor owns the split — the driver never
+        materializes data). Sessionless callers (the DataSource planner worker) fetch inline.
 
         Local-mode note: executors share the driver's filesystem, so writes to ``local``
         are immediately servable; on a real cluster ``local`` must be a shared or
@@ -641,8 +635,9 @@ class CacheManager:
         checked = broken = repaired = 0
         for entry in self.manifest.entries():
             checked += 1
+            # walk the copy: a whole-file entry keeps the remote's partition subdirs
             ok = os.path.isdir(entry.local_path) and any(
-                f.endswith(".parquet") for f in os.listdir(entry.local_path)
+                f.endswith(".parquet") for _, _, files in os.walk(entry.local_path) for f in files
             )
             if not ok:
                 broken += 1

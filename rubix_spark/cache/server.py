@@ -24,8 +24,8 @@ Methods (reference analog in parens):
 - ``evict(budget_bytes)``      — LRU eviction to budget
 - ``ping()``                   — liveness (the heartbeat the reference's coordinator polls)
 - ``fetch(path)``              — serve this node's CACHED copy to a peer: a JSON header
-  listing (name, size) per part file followed by the raw bytes, the
-  LocalDataTransferServer data plane (A8/A9 non-local read) on the same socket
+  listing (path relative to the copy, size) per part file followed by the raw bytes,
+  the LocalDataTransferServer data plane (A8/A9 non-local read) on the same socket
 
 Scale posture: one daemon per node, owning that node's cache dir — identical to the
 reference's deployment. The server is I/O-bound (file copies) so a thread per
@@ -93,7 +93,12 @@ class _Handler(socketserver.StreamRequestHandler):
         if entry is None or entry.state != "CACHED":
             raise FileNotFoundError(f"not cached here: {p['path']}")
         local = entry.local_path
-        names = sorted(f for f in os.listdir(local) if f.endswith(".parquet"))
+        names = sorted(  # relative to the copy root: a partitioned copy has k=v subdirs
+            os.path.relpath(os.path.join(root, f), local)
+            for root, _, fs in os.walk(local) for f in fs if f.endswith(".parquet")
+        )
+        if not names:  # os.walk is silent on a dir unlinked behind the manifest
+            raise FileNotFoundError(f"cached copy gone: {p['path']}")
         files = [{"name": n, "size": os.path.getsize(os.path.join(local, n))} for n in names]
         return (
             {"files": files, "generation": entry.generation,
@@ -217,8 +222,6 @@ class CacheClient:
         non-local read chain — LocalDataTransferServer serving a neighbor's blocks).
         Returns the fetch header (files, generation, remote size/mtime). Raises on a
         peer miss; the caller falls back to the remote."""
-        import os
-
         last: Exception | None = None
         with self._lock:
             for attempt in range(self.retries):
@@ -233,8 +236,14 @@ class CacheClient:
                     header = resp["result"]
                     os.makedirs(dest_dir, exist_ok=True)
                     for f in header["files"]:
+                        name = os.path.normpath(f["name"])
+                        if os.path.isabs(name) or name.split(os.sep)[0] == "..":
+                            self.close()  # the unread frames would desync the stream
+                            raise ValueError(f"peer sent a path outside the copy: {f['name']!r}")
+                        dest = os.path.join(dest_dir, name)
+                        os.makedirs(os.path.dirname(dest), exist_ok=True)
                         remaining = f["size"]
-                        with open(os.path.join(dest_dir, f["name"]), "wb") as out:
+                        with open(dest, "wb") as out:
                             while remaining:
                                 chunk = self._rfile.read(min(remaining, 1 << 20))
                                 if not chunk:

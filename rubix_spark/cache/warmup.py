@@ -5,10 +5,10 @@ The reference serves a cold read directly from remote and queues a background fe
 merges duplicates/overlaps per file, drops stale ones, and downloads in a bounded thread
 pool (``RemoteFetchProcessor.java:102-200``, ``FileDownloader.java:194-239``).
 
-Spark-side: the "download" is a distributed parquet copy submitted in a **separate fair
-scheduler pool** so warm-up jobs never starve foreground queries — the analog of the
-reference's dedicated remote-fetch thread pool.  Request coalescing is whole-file (our
-cache granularity), implemented as de-dup of queued paths; staleness is re-checked at
+Here the background thread is the fetch pool: it runs ``CacheManager.warm()``, a byte
+copy on the manager's own small copy pool, so warm-up submits no Spark job and never
+takes task slots from foreground queries.  Request coalescing is whole-file (our cache
+granularity), implemented as de-dup of queued paths; staleness is re-checked at
 execution time, so a request enqueued before the file changed warms the new content (the
 reference drops the stale request instead — same end state, one fetch later).
 """
@@ -26,9 +26,8 @@ class WarmupProcessor:
     ``drain`` blocks until the queue is empty (test/shutdown hook).
     """
 
-    def __init__(self, manager, pool_name: str = "rubix-warmup"):
+    def __init__(self, manager):
         self.manager = manager
-        self.pool_name = pool_name
         self._q: queue.Queue[str | None] = queue.Queue()
         self._pending: set[str] = set()
         self._lock = threading.Lock()
@@ -52,15 +51,11 @@ class WarmupProcessor:
         return True
 
     def _run(self) -> None:
-        sc = self.manager.spark.sparkContext
         while True:
             path = self._q.get()
             if path is None:
                 return
             try:
-                # run the distributed copy in a dedicated scheduler pool so foreground
-                # queries keep their task slots (FAIR pool analog of the fetch pool)
-                sc.setLocalProperty("spark.scheduler.pool", self.pool_name)
                 entry = self.manager.manifest.get(path)
                 # the module's declared semantics: staleness re-checked at
                 # execution, so a request enqueued before the file changed warms
@@ -72,7 +67,6 @@ class WarmupProcessor:
             except Exception:
                 pass  # fallback semantics: a failed warm just leaves the read remote
             finally:
-                sc.setLocalProperty("spark.scheduler.pool", None)
                 with self._lock:
                     self._pending.discard(path)
                     if not self._pending and self._q.empty():

@@ -3,9 +3,9 @@
 invalidateFileMetadata / getCacheMetrics) plus the validator sweep, as a standalone
 command so an operator can inspect and manage a cache directory without a Spark job.
 
-Runs sessionless: ``CacheManager(spark=None, ...)`` warms by direct file copy (the
-cluster path is the distributed copy inside a job — see cache/manager.py). All output is
-one JSON document on stdout.
+Runs sessionless: ``CacheManager(spark=None, ...)`` warms by the same byte copy a
+session-owning manager uses (see cache/manager.py). All output is one JSON document on
+stdout.
 
     python tools/cache_admin.py stats      --cache-dir /var/cache/rubix
     python tools/cache_admin.py list       --cache-dir /var/cache/rubix
