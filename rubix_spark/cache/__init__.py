@@ -9,7 +9,7 @@ Hadoop FileSystem API (``rubix-core/.../CachingFileSystem.java``,
 - a **CacheManager** (warm / read-through / staleness / LRU eviction / metrics — A2, A5,
   A6, A10, A15, A16, A18-A19, A26, A27) in :mod:`rubix_spark.cache.manager`, which
   materializes hot parquet onto local disk as a byte copy of the remote files (relative
-  paths kept, byte total checked before commit) and rewrites reads to the local copy.
+  paths kept, size-checked before commit) and rewrites reads to the local copy.
 
 Round-4 update — both former design-outs now have executable analogs:
 - cross-NODE read chains (NonLocalReadRequestChain, A8/A9): the locality shim

@@ -5,11 +5,11 @@ Reference parity map (operator ids from SURVEY.md §2.A):
 - ``read()``       — A2's routing (CACHED → local read, else remote ± warm-up) and A5's
                      corruption fallback (local failure → invalidate + direct remote read,
                      ``CachedReadRequestChain.java:204-223``)
-- ``warm()``       — A6/A10/A18-A19 read-through + async warm-up: a byte copy of the
-                     remote files (relative paths kept) on a fixed thread pool
-                     (``FileDownloader.java:194-239``), a byte-count check, then a
-                     generation-checked manifest commit (A13); only the row-group
-                     fetch (``_fetch_runs``) still runs as a Spark job
+- ``warm()``       — A6/A10/A18-A19 read-through + async warm-up: a serial byte copy
+                     of the remote files, relative paths kept (the reference's pool,
+                     ``FileDownloader.java:194-239``, measured slower on local disk), a size
+                     check, then a generation-checked manifest commit (A13); only the
+                     row-group fetch (``_fetch_runs``) still runs as a Spark job
 - staleness        — A16: remote mtime/size vs manifest ⇒ invalidate + new generation
                      (``BookKeeper.java:295-305, 774-777``)
 - generations      — A17: monotonic per-path counter; local dirs carry ``_g<N>`` suffixes
@@ -36,7 +36,6 @@ import re
 import shutil
 import threading
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -168,8 +167,6 @@ class CacheManager:
         return os.path.join(self.cache_dir, "fcache", f"{sanitized}_g{generation}")
 
     # ------------------------------------------------------------------ warm path
-    COPY_THREADS = 4  # A19's bounded fetch pool: files of one warm copied concurrently
-
     def warm(self, remote_path: str) -> str | None:
         """Materialize a remote parquet file/dir into the local cache; returns local path.
 
@@ -184,8 +181,8 @@ class CacheManager:
         mtime, size = _mtime_size(remote_path)
         gen = self.manifest.next_generation(remote_path)
         local = self._local_dir(remote_path, gen)
-        # one round trip for the open; the per-file GETs run in parallel, so
-        # wall-clock pays ~one more trip, not one per file
+        # a flat two round trips: the open, plus one wave of per-file GETs (an object
+        # store client fetches files in parallel; on local disk a serial copy is faster)
         self._remote_penalty(2)
         try:
             self._materialize(remote_path, local)
@@ -231,8 +228,8 @@ class CacheManager:
         dsts = [os.path.join(local, os.path.relpath(src, root)) for src in srcs]
         for d in {local, *map(os.path.dirname, dsts)}:
             os.makedirs(d, exist_ok=True)
-        with ThreadPoolExecutor(max(1, min(self.COPY_THREADS, len(srcs)))) as pool:
-            list(pool.map(shutil.copy2, srcs, dsts))
+        for src, dst in zip(srcs, dsts):
+            shutil.copy2(src, dst)
 
     # ------------------------------------------------------------------ row-group granularity
     # The reference caches 1 MiB blocks with a per-block bitmap (FileMetadata.java:96-97)
@@ -510,7 +507,9 @@ class CacheManager:
             gen = self.manifest.next_generation(remote_path)
             local = self._local_dir(remote_path, gen)
             header = self.peer_client.fetch(remote_path, local)
-            committed = self.manifest.put(
+            # warm()'s size check: a peer copy of another size than the peer's entry
+            # records is never committed
+            committed = _mtime_size(local)[1] == header["size_bytes"] and self.manifest.put(
                 Entry(
                     remote_path=remote_path,
                     local_path=local,
@@ -635,10 +634,10 @@ class CacheManager:
         checked = broken = repaired = 0
         for entry in self.manifest.entries():
             checked += 1
-            # walk the copy: a whole-file entry keeps the remote's partition subdirs
-            ok = os.path.isdir(entry.local_path) and any(
-                f.endswith(".parquet") for _, _, files in os.walk(entry.local_path) for f in files
-            )
+            try:  # a copy is whole files: a missing, torn or extra file changes its total
+                ok = _mtime_size(entry.local_path)[1] == entry.size_bytes
+            except FileNotFoundError:
+                ok = False
             if not ok:
                 broken += 1
                 if repair:

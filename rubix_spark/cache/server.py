@@ -24,7 +24,7 @@ Methods (reference analog in parens):
 - ``evict(budget_bytes)``      — LRU eviction to budget
 - ``ping()``                   — liveness (the heartbeat the reference's coordinator polls)
 - ``fetch(path)``              — serve this node's CACHED copy to a peer: a JSON header
-  listing (path relative to the copy, size) per part file followed by the raw bytes,
+  listing (path relative to the copy, size) per file followed by the raw bytes,
   the LocalDataTransferServer data plane (A8/A9 non-local read) on the same socket
 
 Scale posture: one daemon per node, owning that node's cache dir — identical to the
@@ -93,12 +93,11 @@ class _Handler(socketserver.StreamRequestHandler):
         if entry is None or entry.state != "CACHED":
             raise FileNotFoundError(f"not cached here: {p['path']}")
         local = entry.local_path
-        names = sorted(  # relative to the copy root: a partitioned copy has k=v subdirs
-            os.path.relpath(os.path.join(root, f), local)
-            for root, _, fs in os.walk(local) for f in fs if f.endswith(".parquet")
-        )
-        if not names:  # os.walk is silent on a dir unlinked behind the manifest
+        if not os.path.isdir(local):  # os.walk is silent on a dir unlinked behind the manifest
             raise FileNotFoundError(f"cached copy gone: {p['path']}")
+        names = sorted(  # every file, relative to the copy root: a partitioned copy has k=v subdirs
+            os.path.relpath(os.path.join(root, f), local) for root, _, fs in os.walk(local) for f in fs
+        )
         files = [{"name": n, "size": os.path.getsize(os.path.join(local, n))} for n in names]
         return (
             {"files": files, "generation": entry.generation,

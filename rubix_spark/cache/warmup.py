@@ -6,11 +6,11 @@ merges duplicates/overlaps per file, drops stale ones, and downloads in a bounde
 pool (``RemoteFetchProcessor.java:102-200``, ``FileDownloader.java:194-239``).
 
 Here the background thread is the fetch pool: it runs ``CacheManager.warm()``, a byte
-copy on the manager's own small copy pool, so warm-up submits no Spark job and never
-takes task slots from foreground queries.  Request coalescing is whole-file (our cache
-granularity), implemented as de-dup of queued paths; staleness is re-checked at
-execution time, so a request enqueued before the file changed warms the new content (the
-reference drops the stale request instead — same end state, one fetch later).
+copy, so warm-up submits no Spark job and never takes task slots from foreground
+queries.  Request coalescing is whole-file (our cache granularity), implemented as
+de-dup of queued paths; staleness is re-checked at execution time, so a request enqueued
+before the file changed warms the new content (the reference drops the stale request
+instead — same end state, one fetch later).
 """
 
 from __future__ import annotations

@@ -3,10 +3,12 @@
 - a hive-partitioned remote dir warms into the same relative paths, with or without a
   session: reading the copy equals reading the remote, partition column included (a
   flat copy let same-named part files of different partitions overwrite each other)
-- validate() and the peer-fetch data plane walk the copy, so a partitioned copy is
-  neither judged broken nor shipped empty
-- the copied byte total is checked against the remote size before commit: a short copy
-  leaves no manifest entry and no directory
+- validate() and the peer-fetch data plane walk the copy and judge it by its byte
+  total, not by file names: a partitioned copy, or one whose part files carry no
+  ``.parquet`` suffix (Hive-style ``000000_0``), is neither judged broken nor shipped
+  short
+- the copied byte total is checked against the remote size before commit, for a local
+  warm and for a peer fetch: a short copy leaves no manifest entry and no directory
 """
 
 from __future__ import annotations
@@ -44,6 +46,18 @@ def multi_file(tmp_path):
     for f in range(3):
         ids = list(range(f * 300, (f + 1) * 300))
         pq.write_table(pa.table({"id": ids}), str(root / f"part-{f:05d}.parquet"), row_group_size=100)
+    (root / "_SUCCESS").write_bytes(b"")
+    return str(root)
+
+
+@pytest.fixture()
+def hive_style(tmp_path):
+    """Part files named like Hive/Presto output: no ``.parquet`` suffix."""
+    root = tmp_path / "remote" / "h.parquet"
+    root.mkdir(parents=True)
+    for f in range(2):
+        ids = list(range(f * 50, (f + 1) * 50))
+        pq.write_table(pa.table({"id": ids}), str(root / f"{f:06d}_0"))
     (root / "_SUCCESS").write_bytes(b"")
     return str(root)
 
@@ -164,3 +178,50 @@ def test_short_copy_is_never_committed(multi_file, tmp_path, monkeypatch):
     monkeypatch.setattr(shutil, "copy2", real_copy)
     local = cm.warm(multi_file)  # a clean retry commits
     assert local is not None and _same_tree(multi_file, local)
+
+
+def test_validate_judges_a_copy_by_its_byte_total(hive_style, tmp_path):
+    cm = CacheManager(None, str(tmp_path / "cache"))
+    local = cm.warm(hive_style)
+    assert cm.validate() == {"checked": 1, "broken": 0, "repaired": 0, "orphans_swept": 0}
+    with open(os.path.join(local, "000001_0"), "r+b") as f:  # a torn file keeps its name
+        f.truncate(os.path.getsize(f.name) - 1)
+    assert cm.validate()["broken"] == 1
+    assert cm.manifest.get(hive_style) is None
+
+
+def test_peer_fetch_ships_every_file(spark, hive_style, tmp_path):
+    from rubix_spark.cache.server import CacheClient, CacheServer
+
+    node_a = CacheServer(str(tmp_path / "node_a"))
+    node_a.serve_background()
+    try:
+        node_a.manager.warm(hive_style)
+        node_b = CacheManager(spark, str(tmp_path / "node_b"), peer_client=CacheClient(*node_a.address))
+        df = node_b.read(hive_style)
+        assert node_b.stats()["peer_fetches"] == 1
+        assert _rows(df) == _rows(spark.read.parquet(hive_style))
+        assert _same_tree(hive_style, node_b.manifest.get(hive_style).local_path)
+        assert node_b.validate()["broken"] == 0
+    finally:
+        node_a.shutdown()
+
+
+def test_peer_copy_of_the_wrong_size_is_never_committed(spark, hive_style, tmp_path):
+    from rubix_spark.cache.server import CacheClient, CacheServer
+
+    node_a = CacheServer(str(tmp_path / "node_a"))
+    node_a.serve_background()
+    try:
+        peer_copy = node_a.manager.warm(hive_style)
+        with open(os.path.join(peer_copy, "000000_0"), "ab") as f:  # now larger than size_bytes
+            f.write(b"x")
+        node_b = CacheManager(spark, str(tmp_path / "node_b"), peer_client=CacheClient(*node_a.address))
+        df = node_b.read(hive_style)  # the fetch is dropped; the read warms from the remote
+        assert node_b.stats()["peer_fetches"] == 0
+        assert _rows(df) == _rows(spark.read.parquet(hive_style))
+        local = node_b.manifest.get(hive_style).local_path
+        assert _same_tree(hive_style, local)
+        assert os.listdir(os.path.join(node_b.cache_dir, "fcache")) == [os.path.basename(local)]
+    finally:
+        node_a.shutdown()
