@@ -2,14 +2,21 @@
 
 Reference parity map (operator ids from SURVEY.md §2.A):
 
-- ``read()``       — A2's routing (CACHED → local read, else remote ± warm-up) and A5's
-                     corruption fallback (local failure → invalidate + direct remote read,
+- ``resolve()``    — A2's routing, the one route of every whole-file read (CACHED+fresh →
+                     the local copy; expired or stale → invalidate, then the miss route;
+                     miss → peer copy, else remote ± warm-up); returns the path to read.
+                     ``read()`` and the ``rubix_cache`` DataSource both call it
+- ``read()``       — ``resolve()`` as a DataFrame, memoized per local copy, plus A5's
+                     corruption fallback (local failure → invalidate + re-route,
                      ``CachedReadRequestChain.java:204-223``)
 - ``warm()``       — A6/A10/A18-A19 read-through + async warm-up: a serial byte copy
                      of the remote files, relative paths kept (the reference's pool,
-                     ``FileDownloader.java:194-239``, measured slower on local disk), a size
-                     check, then a generation-checked manifest commit (A13); only the
-                     row-group fetch (``_fetch_runs``) still runs as a Spark job
+                     ``FileDownloader.java:194-239``, measured slower on local disk)
+- ``_commit()``    — the one commit of ``warm()``, ``warm_row_groups()`` and the peer
+                     fetch: fresh ``_g<N>`` dir, size check, generation-checked manifest
+                     CAS (A13), evict to budget
+- row groups       — A4 collation at sub-file granularity: ``_fetch_runs`` reads each
+                     collated run in-process, one remote trip per run
 - staleness        — A16: remote mtime/size vs manifest ⇒ invalidate + new generation
                      (``BookKeeper.java:295-305, 774-777``)
 - generations      — A17: monotonic per-path counter; local dirs carry ``_g<N>`` suffixes
@@ -39,25 +46,26 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from rubix_spark.cache.manifest import CACHED, WARMING, Entry, Manifest
+from rubix_spark.cache.manifest import CACHED, Entry, Manifest
 
 
 class CacheReadError(RuntimeError):
     """Raised in strict mode when a cached read fails (CacheConfig.java:62 analog)."""
 
 
+def walk_files(path: str) -> list[str]:
+    """Every file under the dir ``path``, sorted; ``[path]`` when it is a file."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(os.path.join(root, f) for root, _, files in os.walk(path) for f in files)
+
+
 def _mtime_size(path: str) -> tuple[float, int]:
     st = os.stat(path)
-    if os.path.isdir(path):
-        total = 0
-        mt = st.st_mtime
-        for root, _, files in os.walk(path):
-            for fn in files:
-                s = os.stat(os.path.join(root, fn))
-                total += s.st_size
-                mt = max(mt, s.st_mtime)
-        return mt, total
-    return st.st_mtime, st.st_size
+    if not os.path.isdir(path):
+        return st.st_mtime, st.st_size
+    sts = [os.stat(f) for f in walk_files(path)]
+    return max([st.st_mtime, *(s.st_mtime for s in sts)]), sum(s.st_size for s in sts)
 
 
 class CacheManager:
@@ -81,7 +89,7 @@ class CacheManager:
         # GET, whole-file copy, direct serve) pays one synthetic round trip, the way an
         # object-store GET does — the backend the cache exists for (reference
         # README.md:5-12). Collated runs each pay ONE trip (that is what collation is
-        # for); parallel fetch tasks pay their trips concurrently, like parallel GETs.
+        # for), fetched one after another like warm()'s file copies.
         # Freshness stats (HEAD-class metadata) stay free, mirroring the reference's
         # cached file metadata. 0.0 (default) = local-FS delegate, no injection.
         self.remote_latency_s = float(remote_latency_s)
@@ -110,12 +118,12 @@ class CacheManager:
         os.makedirs(os.path.join(cache_dir, "fcache"), exist_ok=True)
         self.manifest = Manifest(os.path.join(cache_dir, "manifest.json"))
         self._lock = threading.RLock()
-        # hit-path DataFrame memo keyed by (remote_path, generation): schema inference
+        # hit-path DataFrame memo keyed by the local ``_g<N>`` dir: schema inference
         # on spark.read.parquet costs ~150 ms per call (driver file listing + footer
         # read), which dominated warm reads. Every re-warm bumps the generation (new
         # local dir), so a memoized entry can never serve stale or relocated data —
         # the in-memory-metadata pattern of the reference's BookKeeper cache.
-        self._df_memo: dict[tuple[str, int], DataFrame] = {}
+        self._df_memo: dict[str, DataFrame] = {}
         # two-phase delete state (see _defer_delete): [(unlink_after_ts, path), ...].
         # Expired trash is drained opportunistically on read()/warm() as well as on
         # each new deferral, and flushed at interpreter exit (weakref so the hook
@@ -172,59 +180,57 @@ class CacheManager:
 
         A byte copy keeping each file's path relative to the remote root (so partition
         dirs, file split and row groups survive). Returns None when gated out by skip
-        patterns or dummy mode, when the copied bytes differ from the remote size, or
-        when a newer generation won.
+        patterns or dummy mode, or when ``_commit`` drops the copy.
         """
         if not self.cacheable(remote_path) or self.dummy:
             return None
-        self._drain_trash()  # reclaim expired deferred deletes opportunistically
         mtime, size = _mtime_size(remote_path)
-        gen = self.manifest.next_generation(remote_path)
-        local = self._local_dir(remote_path, gen)
-        # a flat two round trips: the open, plus one wave of per-file GETs (an object
-        # store client fetches files in parallel; on local disk a serial copy is faster)
-        self._remote_penalty(2)
-        try:
+
+        def produce(local: str) -> dict:
+            # a flat two round trips: the open, plus one wave of per-file GETs (an object
+            # store client fetches files in parallel; on local disk a serial copy is faster)
+            self._remote_penalty(2)
             self._materialize(remote_path, local)
-            copied = _mtime_size(local)[1]
+            return {"size_bytes": size, "last_modified": mtime}
+
+        return self._commit(remote_path, produce)
+
+    def _commit(self, key: str, produce, counter: str = "warmed_files") -> str | None:
+        """The one commit step of every cached copy (``warm``, ``warm_row_groups``, the
+        peer fetch): bump ``key``'s generation, let ``produce(local)`` fill the fresh
+        ``_g<N>`` dir and return the copy's Entry fields, then commit by generation CAS
+        (A13/A17) and evict to budget.
+
+        Returns the local path, or None when the dir's byte total is not the returned
+        ``size_bytes`` (A19's check, ``FileDownloadRequestChain.java:145-150`` — a torn
+        read), a newer generation won, or the eviction removed the new copy itself.
+        A dropped or failed copy never leaves its dir behind: it is in no manifest
+        entry, so eviction and validate() could never reclaim it.
+        """
+        self._drain_trash()  # reclaim expired deferred deletes opportunistically
+        gen = self.manifest.next_generation(key)
+        local = self._local_dir(key, gen)
+        try:
+            fields = produce(local)
+            committed = _mtime_size(local)[1] == fields["size_bytes"] and self.manifest.put(
+                Entry(remote_path=key, local_path=local, generation=gen, state=CACHED, **fields)
+            )
         except BaseException:
-            # a failed warm (transient remote error, torn read under a concurrent
-            # rewrite) must not leak its partial dir: it is in no manifest entry, so
-            # eviction and validate() could never reclaim it — every failed warm
-            # would leak disk forever (found by the generated cache schedules, r13)
             shutil.rmtree(local, ignore_errors=True)
             raise
-        if copied != size:
-            # A19 byte check (FileDownloadRequestChain.java:145-150): a copy whose byte
-            # total is not the recorded remote size (a torn read) is never committed
-            shutil.rmtree(local, ignore_errors=True)
-            return None
-        committed = self.manifest.put(
-            Entry(
-                remote_path=remote_path,
-                local_path=local,
-                size_bytes=size,
-                last_modified=mtime,
-                generation=gen,
-                state=CACHED,
-            )
-        )
         if not committed:
-            # a newer generation won the race (A17): discard our copy
             shutil.rmtree(local, ignore_errors=True)
             return None
         with self._lock:
-            self._counters["warmed_files"] += 1
+            self._counters[counter] += 1
         self.evict_to_budget()
-        return local
+        entry = self.manifest.get(key)
+        return local if entry is not None and entry.local_path == local else None
 
     def _materialize(self, remote_path: str, local: str) -> None:
         """Copy the remote file, or every file under the remote dir, into ``local``."""
-        if os.path.isdir(remote_path):
-            root = remote_path
-            srcs = [os.path.join(r, f) for r, _, fs in os.walk(remote_path) for f in fs]
-        else:
-            root, srcs = os.path.dirname(remote_path), [remote_path]
+        root = remote_path if os.path.isdir(remote_path) else os.path.dirname(remote_path)
+        srcs = walk_files(remote_path)
         dsts = [os.path.join(local, os.path.relpath(src, root)) for src in srcs]
         for d in {local, *map(os.path.dirname, dsts)}:
             os.makedirs(d, exist_ok=True)
@@ -292,17 +298,11 @@ class CacheManager:
         prev = self.manifest.get(key)
         have = set(prev.row_groups or []) if prev is not None and self._fresh(prev, remote_path) else set()
         want = sorted(set(row_groups) | have)
-        gen = self.manifest.next_generation(key)
-        # the local dir derives from the manifest KEY (…#rg), not the raw remote path:
-        # whole-file and row-group granularities of one path must never share a
-        # directory, or the whole-file hit path would read the rg_* subset files too
-        # (silently duplicated rows) and invalidating either granularity would rmtree
-        # the other's live data
-        local = self._local_dir(key, gen)
-        os.makedirs(local, exist_ok=True)
-        try:
+
+        def produce(local: str) -> dict:
+            os.makedirs(local, exist_ok=True)
             fetch = set(want) - have
-            for i in sorted(have & set(want)):
+            for i in sorted(have):
                 try:
                     shutil.copy2(
                         os.path.join(prev.local_path, f"rg_{i:05d}.parquet"),
@@ -313,74 +313,39 @@ class CacheManager:
                     # manifest read and the copy — the group is simply not-have;
                     # refetch from remote
                     fetch.add(i)
-            # collated fetch (A4): one backend read per contiguous run, sliced back
-            # into per-group local files (the serving granularity)
             self._fetch_runs(remote_path, local, self.collate(sorted(fetch)))
-            size = sum(os.path.getsize(os.path.join(local, f)) for f in os.listdir(local))
-        except BaseException:
-            # same no-partial-dir-leak contract as warm() (generated schedules, r13)
-            shutil.rmtree(local, ignore_errors=True)
-            raise
-        committed = self.manifest.put(
-            Entry(
-                remote_path=key,
-                local_path=local,
-                size_bytes=size,
-                last_modified=mtime,
-                generation=gen,
-                state=CACHED,
-                row_groups=want,
-                remote_size=rsize,
-            )
-        )
-        if not committed:
-            shutil.rmtree(local, ignore_errors=True)
-            return None
-        if prev is not None:
+            return {"size_bytes": _mtime_size(local)[1], "last_modified": mtime,
+                    "row_groups": want, "remote_size": rsize}
+
+        # the local dir derives from the manifest KEY (…#rg), not the raw remote path:
+        # whole-file and row-group granularities of one path must never share a
+        # directory, or the whole-file hit path would read the rg_* subset files too
+        # (silently duplicated rows) and invalidating either granularity would rmtree
+        # the other's live data
+        local = self._commit(key, produce)
+        if local is not None and prev is not None:
             self._defer_delete(prev.local_path)  # readers of the old subset may be in flight
-        with self._lock:
-            self._counters["warmed_files"] += 1
-        self.evict_to_budget()
         return local
 
     def _fetch_runs(self, remote_path: str, local: str, runs: list[list[int]]) -> None:
-        """A19's parallel downloader at row-group granularity, and the one warm path run
-        as a Spark job: each collated run is an independent EXECUTOR task (the reference's
-        ``FileDownloader.java:194-239`` fans chunks across a thread pool; at cluster scale
-        each run is fetched by whichever executor owns the split — the driver never
-        materializes data). Sessionless callers (the DataSource planner worker) fetch inline.
+        """A4 + A19 at row-group granularity: each collated run is one ranged read of the
+        remote (one remote trip), sliced back into one local parquet per group (the
+        serving granularity). Runs are read in-process, one after another, the way
+        ``warm()`` copies files: a few megabytes of row groups do not repay a Spark
+        job's scheduling (about a second per warm on a 4-core host)."""
+        if not runs:
+            return
+        import pyarrow.parquet as pq
 
-        Local-mode note: executors share the driver's filesystem, so writes to ``local``
-        are immediately servable; on a real cluster ``local`` must be a shared or
-        per-node cache mount (docs/LOCALITY.md covers the deployment shape).
-        """
-
-        latency_s = self.remote_latency_s
-
-        def fetch(run: list[int]) -> int:
-            import time as _time
-
-            import pyarrow.parquet as pq
-
-            if latency_s > 0.0:
-                _time.sleep(latency_s)  # one ranged GET per collated run, paid in-task
-            pf = pq.ParquetFile(remote_path)
+        pf = pq.ParquetFile(remote_path)
+        for run in runs:
+            self._remote_penalty()  # one ranged GET per collated run
             tbl = pf.read_row_groups(run)
             offset = 0
             for i in run:
                 n = pf.metadata.row_group(i).num_rows
                 pq.write_table(tbl.slice(offset, n), os.path.join(local, f"rg_{i:05d}.parquet"))
                 offset += n
-            return len(run)
-
-        if not runs:
-            return
-        if self.spark is not None:
-            sc = self.spark.sparkContext
-            sc.parallelize(runs, len(runs)).map(fetch).collect()
-        else:
-            for run in runs:
-                fetch(run)
 
     def read_row_groups(self, remote_path: str, row_groups: list[int], warm_on_miss: bool = True) -> DataFrame:
         """Serve specific row groups: from the cached subset when it covers the request
@@ -414,7 +379,7 @@ class CacheManager:
             self._counters["misses"] += 1
         if warm_on_miss and self.cacheable(remote_path) and not self.dummy:
             local = self.warm_row_groups(remote_path, want)
-            if local and self.manifest.get(key) is not None:
+            if local is not None:
                 files = [os.path.join(local, f"rg_{i:05d}.parquet") for i in want]
                 return self.spark.read.parquet(*files)
         self._remote_penalty()
@@ -436,102 +401,84 @@ class CacheManager:
         return df
 
     # ------------------------------------------------------------------ read path
-    def read(self, remote_path: str, warm_on_miss: bool = True) -> DataFrame:
-        """RubiX's per-read routing (CachingInputStream.java:315-500, file granularity).
+    def resolve(self, remote_path: str, warm_on_miss: bool = True) -> str:
+        """RubiX's per-read routing (CachingInputStream.java:315-500, file granularity):
+        returns the path a whole-file read should scan.
 
-        CACHED+fresh → local parquet; stale → invalidate, re-warm; miss → warm inline
-        (read-through, A6) or serve remote directly when warming is off / path gated.
+        CACHED+fresh → the local copy; TTL-expired or stale → invalidate, then the miss
+        route; miss → a peer's copy, else (async mode) the remote while a warm-up is
+        queued, else a read-through warm (A6). The remote itself when warming is off,
+        the path is gated, or the new copy was dropped.
         """
         self._drain_trash()  # reclaim expired deferred deletes opportunistically
         entry = self.manifest.get(remote_path)
-        if entry is not None and entry.state == CACHED:
-            if self.ttl_seconds is not None and time.time() - entry.last_access > self.ttl_seconds:
-                self.invalidate(remote_path)
-                entry = None
-        if entry is not None and entry.state == CACHED:
-            if self._fresh(entry, remote_path):
+        if entry is not None:
+            expired = self.ttl_seconds is not None and time.time() - entry.last_access > self.ttl_seconds
+            if not expired and self._fresh(entry, remote_path):
                 self.manifest.touch(remote_path)
-                try:
-                    memo_key = (remote_path, entry.generation)
-                    df = self._df_memo.get(memo_key)
-                    if df is None:
-                        df = self.spark.read.parquet(entry.local_path)
-                        self._df_memo[memo_key] = df
-                    with self._lock:
-                        self._counters["hits"] += 1
-                    return df
-                except Exception:
-                    # corruption fallback (CachedReadRequestChain.java:204-223)
-                    if self.strict:
-                        raise CacheReadError(f"cached read failed for {remote_path}")
-                    self.invalidate(remote_path)
-                    with self._lock:
-                        self._counters["fallbacks"] += 1
-            else:
-                self.invalidate(remote_path)
+                with self._lock:
+                    self._counters["hits"] += 1
+                return entry.local_path
+            self.invalidate(remote_path)
         with self._lock:
             self._counters["misses"] += 1
         if warm_on_miss and self.cacheable(remote_path) and not self.dummy:
             local = self._fetch_from_peer(remote_path)
+            if local is None and self._warmup is not None:
+                self._warmup.enqueue(remote_path)  # A10: serve the remote now, warm behind
+            elif local is None:
+                local = self.warm(remote_path)
             if local is not None:
-                return self.spark.read.parquet(local)
-            if self._warmup is not None:
-                # A10 parallel warm-up: serve the caller from remote NOW, warm behind
-                self._warmup.enqueue(remote_path)
-                self._remote_penalty()
-                return self.spark.read.parquet(remote_path)
-            local = self.warm(remote_path)
-            # the budget eviction right after warm() may have evicted the fresh copy
-            # itself (tiny budgets) — serve local only if it survived in the manifest
-            if local and self.manifest.get(remote_path) is not None:
-                return self.spark.read.parquet(local)
+                return local
         self._remote_penalty()
-        return self.spark.read.parquet(remote_path)
+        return remote_path
+
+    def read(self, remote_path: str, warm_on_miss: bool = True) -> DataFrame:
+        """``resolve()``'s path as a DataFrame, memoized per local copy.
+
+        A local copy that fails to plan (A5, CachedReadRequestChain.java:204-223) is
+        invalidated and the read re-routed once; strict mode raises instead.
+        """
+        local = self.resolve(remote_path, warm_on_miss)
+        if local == remote_path:
+            return self.spark.read.parquet(remote_path)
+        # the isdir check: a memoized plan over a copy deleted behind the manifest
+        # would fail at execution, past the fallback
+        df = self._df_memo.get(local) if os.path.isdir(local) else None
+        if df is None:
+            try:
+                df = self._df_memo[local] = self.spark.read.parquet(local)
+            except Exception:
+                if self.strict:
+                    raise CacheReadError(f"cached read failed for {remote_path}")
+                self.invalidate(remote_path)
+                with self._lock:
+                    self._counters["fallbacks"] += 1
+                return self.spark.read.parquet(self.resolve(remote_path, warm_on_miss))
+        return df
 
     def _fetch_from_peer(self, remote_path: str) -> str | None:
         """A8/A9: pull a peer daemon's CACHED copy into this node's cache on a miss.
 
         Costs one LAN transfer instead of an object-store read (which pays
-        ``remote_latency_s`` per trip here). The fetched copy commits through the
-        normal generation CAS, so staleness/eviction semantics are identical to a
-        locally-warmed entry; a losing CAS (someone re-warmed concurrently) discards
-        the fetch. Any peer failure degrades silently to the remote path — peer
-        serving is an optimization, never a correctness dependency."""
+        ``remote_latency_s`` per trip here). The fetched copy commits through
+        ``_commit``, sized against the peer entry's ``size_bytes``, so staleness and
+        eviction semantics are identical to a locally-warmed entry. Any peer failure
+        degrades silently to the remote path — peer serving is an optimization, never a
+        correctness dependency."""
         if self.peer_client is None:
             return None
-        local = None
         try:
-            status = self.peer_client.get_cache_status(remote_path)
-            if status.get("state") != CACHED:
+            if self.peer_client.get_cache_status(remote_path).get("state") != CACHED:
                 return None
-            gen = self.manifest.next_generation(remote_path)
-            local = self._local_dir(remote_path, gen)
-            header = self.peer_client.fetch(remote_path, local)
-            # warm()'s size check: a peer copy of another size than the peer's entry
-            # records is never committed
-            committed = _mtime_size(local)[1] == header["size_bytes"] and self.manifest.put(
-                Entry(
-                    remote_path=remote_path,
-                    local_path=local,
-                    size_bytes=header["size_bytes"],
-                    last_modified=header["last_modified"],
-                    generation=gen,
-                    state=CACHED,
-                )
-            )
-            if not committed:
-                shutil.rmtree(local, ignore_errors=True)
-                return None
-            with self._lock:
-                self._counters["peer_fetches"] += 1
-            self.evict_to_budget()
-            return local if self.manifest.get(remote_path) is not None else None
+
+            def produce(local: str) -> dict:
+                header = self.peer_client.fetch(remote_path, local)
+                return {"size_bytes": header["size_bytes"], "last_modified": header["last_modified"]}
+
+            return self._commit(remote_path, produce, counter="peer_fetches")
         except Exception:
-            # degrade to remote — and never leak the partial transfer dir (a peer
-            # that evicted between status and fetch aborts mid-stream; r13 schedules)
-            if local is not None:
-                shutil.rmtree(local, ignore_errors=True)
-            return None
+            return None  # _commit has already removed the partial transfer dir
 
     def _fresh(self, entry: Entry, remote_path: str) -> bool:
         """A16 staleness: compare remote lastModified/size with the cached values.
@@ -583,7 +530,7 @@ class CacheManager:
         if entry:
             self._defer_delete(entry.local_path)
             self.manifest.next_generation(remote_path)
-            self._df_memo.pop((remote_path, entry.generation), None)
+            self._df_memo.pop(entry.local_path, None)
             with self._lock:
                 self._counters["invalidations"] += 1
 
@@ -610,7 +557,7 @@ class CacheManager:
                 if removed is None:
                     continue  # raced an invalidate; re-read total_bytes
                 self._defer_delete(removed.local_path)
-                self._df_memo.pop((removed.remote_path, removed.generation), None)
+                self._df_memo.pop(removed.local_path, None)
                 evicted += 1
                 self._counters["evictions"] += 1
         return evicted

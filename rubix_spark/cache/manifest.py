@@ -8,10 +8,10 @@ so the manifest is one entry per remote path:
 
     remote_path -> {local_path, size_bytes, last_modified, generation, last_access, state}
 
-States mirror the thrift ``Location`` enum (``bookkeeper.thrift:6-10``): CACHED (local
-copy valid) / WARMING (async materialization queued) — LOCAL/NON_LOCAL ownership does not
-apply driver-side.  Persistence is a JSON file next to the cached data, rewritten
-atomically; generation numbers survive restarts exactly like the ``_g<N>`` file suffixes
+The state is always CACHED (local copy valid), after the thrift ``Location`` enum
+(``bookkeeper.thrift:6-10``) — LOCAL/NON_LOCAL ownership does not apply driver-side.
+Persistence is a JSON file next to the cached data, rewritten atomically; generation
+numbers survive restarts exactly like the ``_g<N>`` file suffixes
 (``rubix-spi/.../CacheUtil.java:162-167``).
 """
 
@@ -28,7 +28,6 @@ from dataclasses import asdict, dataclass, field
 
 
 CACHED = "CACHED"
-WARMING = "WARMING"
 
 
 @dataclass

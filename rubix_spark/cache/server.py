@@ -42,7 +42,7 @@ import socketserver
 import threading
 import time
 
-from rubix_spark.cache.manager import CacheManager
+from rubix_spark.cache.manager import CacheManager, walk_files
 
 
 _MAX_LINE = 1 << 20  # request-frame bound: a newline-less flood must not OOM the daemon
@@ -95,9 +95,8 @@ class _Handler(socketserver.StreamRequestHandler):
         local = entry.local_path
         if not os.path.isdir(local):  # os.walk is silent on a dir unlinked behind the manifest
             raise FileNotFoundError(f"cached copy gone: {p['path']}")
-        names = sorted(  # every file, relative to the copy root: a partitioned copy has k=v subdirs
-            os.path.relpath(os.path.join(root, f), local) for root, _, fs in os.walk(local) for f in fs
-        )
+        # every file, relative to the copy root: a partitioned copy has k=v subdirs
+        names = [os.path.relpath(f, local) for f in walk_files(local)]
         files = [{"name": n, "size": os.path.getsize(os.path.join(local, n))} for n in names]
         return (
             {"files": files, "generation": entry.generation,

@@ -5,10 +5,13 @@ This is the literal "Spark data source integration for caching" the charter name
 
     spark.read.format("rubix_cache").option("path", remote_path).load()
 
-resolves the path through the CacheManager at *plan time* (hit → the warmed local copy,
-miss → read-through warm, stale → invalidate + re-warm — all A2/A6/A16 semantics), then
-scans whatever copy won as Arrow record batches, one input partition per parquet
-row-group for parallelism.
+resolves the path at *plan time* through ``CacheManager.resolve()``, the same route as
+``CacheManager.read()`` (hit → the warmed local copy, miss → read-through warm, stale →
+invalidate + re-warm — all A2/A6/A16 semantics), then scans whatever copy won as Arrow
+record batches, one input partition per parquet row-group for parallelism. The data
+files are listed recursively by Spark's rule (names starting with ``_`` or ``.`` are
+hidden; any other name is a data file, suffix or not); a partitioned (``k=v``) layout
+raises, since its column lives in the path and this source does not read it.
 
 Scan-side optimizations (the parts a 100 TB deployment cares about):
 
@@ -35,7 +38,6 @@ supported locality path).
 
 from __future__ import annotations
 
-import glob
 import os
 from dataclasses import dataclass
 
@@ -73,27 +75,26 @@ def _manager(cache_dir: str):
 
 def _resolve(options: dict) -> str:
     """Plan-time path resolution through the cache (read-through warm on miss)."""
-    remote = options["path"]
-    cache_dir = options.get("cache_dir", "/tmp/rubix_spark_cache/ds")
-    cm = _manager(cache_dir)
-    entry = cm.manifest.get(remote)
-    if entry is not None and cm._fresh(entry, remote):
-        cm.manifest.touch(remote)
-        with cm._lock:
-            cm._counters["hits"] += 1
-        return entry.local_path
-    with cm._lock:
-        cm._counters["misses"] += 1
-    if entry is not None:
-        cm.invalidate(remote)
-    local = cm.warm(remote) if cm.cacheable(remote) else None
-    return local if local and cm.manifest.get(remote) is not None else remote
+    return _manager(options.get("cache_dir", "/tmp/rubix_spark_cache/ds")).resolve(options["path"])
 
 
-def _parquet_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(glob.glob(os.path.join(path, "*.parquet")))
-    return [path]
+def _data_files(path: str) -> list[str]:
+    """The data files of a file or dir path, listed the way ``spark.read.parquet`` does."""
+    from rubix_spark.cache.manager import walk_files
+
+    if not os.path.isdir(path):
+        return [path]
+    files = []
+    for f in walk_files(path):
+        parts = os.path.relpath(f, path).split(os.sep)
+        if any(p.startswith(("_", ".")) for p in parts):
+            continue
+        if any("=" in p for p in parts[:-1]):
+            raise ValueError(f"rubix_cache does not read partitioned (k=v) layouts: {f}")
+        files.append(f)
+    if not files:
+        raise FileNotFoundError(f"no data files under {path}")
+    return files
 
 
 # parquet footer memo: (path, mtime_ns, size) -> (num_row_groups, arrow_schema, stats, rows)
@@ -246,9 +247,7 @@ class RubixCacheReader(DataSourceReader):
             yield f
 
     def partitions(self):
-        files = _parquet_files(self._resolved)
-        if not files:  # bare-file path that isn't a dir: single whole-file partition
-            return [_FilePartition(file=self._resolved, row_group=-1)]
+        files = _data_files(self._resolved)
         parts = []
         for f in files:
             n_rg, _, stats, rows = _file_meta(f)
@@ -271,13 +270,8 @@ class RubixCacheReader(DataSourceReader):
             return
         pf = pq.ParquetFile(partition.file)
         kwargs = {"columns": self._columns} if self._columns else {}
-        table = (
-            pf.read_row_group(partition.row_group, **kwargs)
-            if partition.row_group >= 0
-            else pf.read(**kwargs)
-        )
-        if partition.row_group >= 0 and partition.slice_len >= 0:
-            table = table.slice(partition.slice_start, partition.slice_len)
+        table = pf.read_row_group(partition.row_group, **kwargs).slice(
+            partition.slice_start, partition.slice_len)
         if self._filters:
             expr = _arrow_expr(self._filters)
             if expr is not None:
@@ -293,7 +287,7 @@ class RubixCacheDataSource(DataSource):
     def schema(self):
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        files = _parquet_files(_resolve(self.options))
+        files = _data_files(_resolve(self.options))
         _, arrow_schema, _, _ = _file_meta(files[0])
         cols = _columns_option(self.options)
         if cols:

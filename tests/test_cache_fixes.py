@@ -6,8 +6,10 @@
 - evict race: a concurrently-deleted previous subset dir must degrade to a remote
   refetch, never propagate FileNotFoundError
 - TTL applies to row-group subset entries exactly as to whole-file entries (A16)
-- the collated fetch runs as a Spark job (one executor task per run —
-  FileDownloader.java:194-239 analog), not driver-side pyarrow
+- the collated row-group fetch reads the remote once per collated run, in-process
+  (A4 collation), and lands one local file per group
+- a copy its own budget eviction removed is not handed out: warm, warm_row_groups
+  and the peer fetch all return None for it
 """
 
 from __future__ import annotations
@@ -84,31 +86,45 @@ def test_ttl_expires_rowgroup_entries(spark, multi_rg_file, tmp_path):
     assert s["invalidations"] == 1 and s["misses"] == 1
 
 
-def test_collated_fetch_runs_as_spark_job(spark, multi_rg_file, tmp_path):
-    """The warm copy must fan out one executor task per collated run — the driver never
-    materializes row-group bytes when a session is available."""
-    calls = []
+def test_collated_fetch_reads_once_per_run(spark, multi_rg_file, tmp_path, monkeypatch):
+    """Row groups [0, 1, 7] collate into runs [0, 1] and [7]: one remote read each,
+    sliced back into one local parquet per group."""
+    reads = []
+    real = pq.ParquetFile.read_row_groups
 
-    class _SC:
-        def __init__(self, sc):
-            self._sc = sc
+    def counting(self, row_groups, *a, **k):
+        reads.append(list(row_groups))
+        return real(self, row_groups, *a, **k)
 
-        def parallelize(self, data, n):
-            calls.append((list(data), n))
-            return self._sc.parallelize(data, n)
-
-    class _Spark:
-        def __init__(self, s):
-            self.sparkContext = _SC(s.sparkContext)
-            self._s = s
-
-        def __getattr__(self, name):
-            return getattr(self._s, name)
-
-    cm = CacheManager(_Spark(spark), str(tmp_path / "cache"))
-    cm.warm_row_groups(multi_rg_file, [0, 1, 7])  # two collated runs: [0,1] and [7]
-    assert calls == [([[0, 1], [7]], 2)]
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", counting)
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    cm.warm_row_groups(multi_rg_file, [0, 1, 7])
+    assert reads == [[0, 1], [7]]
     entry = cm.manifest.get(cm._rg_key(multi_rg_file))
     assert entry.row_groups == [0, 1, 7]
     got = _rows(spark.read.parquet(os.path.join(entry.local_path, "rg_00007.parquet")))
     assert got == [(i, i * 2) for i in range(700, 800)]
+
+
+def test_self_evicted_copy_is_not_returned(multi_rg_file, tmp_path):
+    """With a 1-byte budget every new copy is evicted by its own commit: no producer
+    may return its path (it is unlinked after the grace period)."""
+    from rubix_spark.cache.server import CacheClient, CacheServer
+
+    cm = CacheManager(None, str(tmp_path / "cache"), budget_bytes=1)
+    assert cm.warm(multi_rg_file) is None
+    assert cm.warm_row_groups(multi_rg_file, [0, 1]) is None
+    assert cm.manifest.get(multi_rg_file) is None
+    assert cm.manifest.get(cm._rg_key(multi_rg_file)) is None
+
+    node_a = CacheServer(str(tmp_path / "node_a"))
+    node_a.serve_background()
+    try:
+        node_a.manager.warm(multi_rg_file)
+        node_b = CacheManager(None, str(tmp_path / "node_b"), budget_bytes=1,
+                              peer_client=CacheClient(*node_a.address))
+        assert node_b._fetch_from_peer(multi_rg_file) is None
+        assert node_b.manifest.get(multi_rg_file) is None
+        assert node_b.stats()["evictions"] == 1
+    finally:
+        node_a.shutdown()

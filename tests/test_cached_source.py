@@ -109,3 +109,32 @@ def test_columns_option_projects_scan(spark, multi_rg_remote, tmp_path):
     )
     assert df.columns == ["v"]
     assert df.count() == 1000
+
+
+def _hive_dir(root):
+    """Part files without a ``.parquet`` suffix, plus a ``_SUCCESS`` marker."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root.mkdir(parents=True)
+    for f in range(2):
+        pq.write_table(pa.table({"id": list(range(f * 50, (f + 1) * 50))}), str(root / f"{f:06d}_0"))
+    (root / "_SUCCESS").write_bytes(b"")
+    return str(root)
+
+
+def test_suffixless_part_files_are_listed(spark, tmp_path):
+    register_cache_source(spark)
+    path = _hive_dir(tmp_path / "remote" / "h")
+    got = _read(spark, path, str(tmp_path / "dsc4"))
+    assert _rows(got) == _rows(spark.read.parquet(path))
+
+
+def test_partitioned_layout_is_refused(spark, tmp_path):
+    """A k=v dir would lose its partition column: the source refuses it by name."""
+    from rubix_spark.sources.cached_source import RubixCacheDataSource
+
+    path = _hive_dir(tmp_path / "remote" / "p" / "k=1")
+    src = RubixCacheDataSource({"path": os.path.dirname(path), "cache_dir": str(tmp_path / "dsc5")})
+    with pytest.raises(ValueError, match="partitioned"):
+        src.schema()
