@@ -5,7 +5,8 @@ Reference parity map (operator ids from SURVEY.md §2.A):
 - ``resolve()``    — A2's routing, the one route of every whole-file read (CACHED+fresh →
                      the local copy; expired or stale → invalidate, then the miss route;
                      miss → peer copy, else remote ± warm-up); returns the path to read.
-                     ``read()`` and the ``rubix_cache`` DataSource both call it
+                     ``read()`` and the ``rubix_cache`` DataSource both call it; its hit
+                     test, ``_lookup()``, is also ``read_row_groups()``'s
 - ``read()``       — ``resolve()`` as a DataFrame, memoized per local copy, plus A5's
                      corruption fallback (local failure → invalidate + re-route,
                      ``CachedReadRequestChain.java:204-223``)
@@ -23,6 +24,9 @@ Reference parity map (operator ids from SURVEY.md §2.A):
                      (``CacheUtil.java:162-167``); stale writers lose the manifest CAS
 - ``evict_to_budget()`` — A15: LRU by last_access down to ``budget_bytes``
                      (weigher/maximumWeight analog, ``BookKeeper.java:629-686``)
+- deferred delete  — A15's one removal listener (``BookKeeper.java:723-746``): every dir
+                     that leaves the manifest (evicted, invalidated, superseded) is a
+                     manifest tombstone, unlinked after ``Manifest.RECLAIM_GRACE``
 - skip patterns    — ``CacheUtil.skipCache`` allow/deny regexes (``CacheUtil.java:203-222``)
 - dummy mode       — A26: metadata-only what-if accounting (``DummyModeCachingInputStream``)
 - ``stats()``      — A27 metrics surface (hit/miss/eviction/invalidation counters,
@@ -124,20 +128,6 @@ class CacheManager:
         # local dir), so a memoized entry can never serve stale or relocated data —
         # the in-memory-metadata pattern of the reference's BookKeeper cache.
         self._df_memo: dict[str, DataFrame] = {}
-        # two-phase delete state (see _defer_delete): [(unlink_after_ts, path), ...].
-        # Expired trash is drained opportunistically on read()/warm() as well as on
-        # each new deferral, and flushed at interpreter exit (weakref so the hook
-        # never pins the manager) — so an evict-then-idle manager still reclaims disk
-        # (ADVICE r6). Disk high-water mark remains budget_bytes + whatever was
-        # evicted within the last grace window; that window is the price of never
-        # unlinking under an in-flight scan.
-        self._evict_grace_s = float(os.environ.get("RUBIX_CACHE_EVICT_GRACE_S", "60"))
-        self._trash: list[tuple[float, str]] = []
-        import atexit
-        import weakref
-
-        _self = weakref.ref(self)
-        atexit.register(lambda: (lambda m: m.flush_trash() if m is not None else None)(_self()))
         self._counters = {
             "hits": 0,
             "misses": 0,
@@ -204,10 +194,10 @@ class CacheManager:
         Returns the local path, or None when the dir's byte total is not the returned
         ``size_bytes`` (A19's check, ``FileDownloadRequestChain.java:145-150`` — a torn
         read), a newer generation won, or the eviction removed the new copy itself.
-        A dropped or failed copy never leaves its dir behind: it is in no manifest
-        entry, so eviction and validate() could never reclaim it.
+        A copy that never committed is deleted here at once: no reader can hold it, and
+        it is in no manifest entry or tombstone, so nothing else would reclaim it
+        before validate()'s orphan age.
         """
-        self._drain_trash()  # reclaim expired deferred deletes opportunistically
         gen = self.manifest.next_generation(key)
         local = self._local_dir(key, gen)
         try:
@@ -321,11 +311,8 @@ class CacheManager:
         # whole-file and row-group granularities of one path must never share a
         # directory, or the whole-file hit path would read the rg_* subset files too
         # (silently duplicated rows) and invalidating either granularity would rmtree
-        # the other's live data
-        local = self._commit(key, produce)
-        if local is not None and prev is not None:
-            self._defer_delete(prev.local_path)  # readers of the old subset may be in flight
-        return local
+        # the other's live data. The put tombstones the previous subset's dir.
+        return self._commit(key, produce)
 
     def _fetch_runs(self, remote_path: str, local: str, runs: list[list[int]]) -> None:
         """A4 + A19 at row-group granularity: each collated run is one ranged read of the
@@ -350,40 +337,31 @@ class CacheManager:
     def read_row_groups(self, remote_path: str, row_groups: list[int], warm_on_miss: bool = True) -> DataFrame:
         """Serve specific row groups: from the cached subset when it covers the request
         and is fresh, else warm-through (or raw remote when warming is off/gated).
-        TTL expiry applies exactly as in ``read()`` (A16 expireAfterWrite parity)."""
+        The hit test is ``resolve()``'s (``_lookup``); a fresh subset that does not cover
+        the request is a miss the warm merges into."""
         key = self._rg_key(remote_path)
         want = sorted(set(row_groups))
-        entry = self.manifest.get(key)
-        if entry is not None and entry.state == CACHED and self.ttl_seconds is not None:
-            if time.time() - entry.last_access > self.ttl_seconds:
+        entry = self._lookup(key, remote_path, lambda e: set(want) <= set(e.row_groups or []))
+        if entry is not None:
+            try:
+                return self.spark.read.parquet(*self._rg_files(entry.local_path, want))
+            except Exception:
+                if self.strict:
+                    raise CacheReadError(f"cached row-group read failed for {remote_path}")
                 self.invalidate(key)
-                entry = None
-        if entry is not None and entry.state == CACHED and set(want) <= set(entry.row_groups or []):
-            if self._fresh(entry, remote_path):
-                self.manifest.touch(key)
-                try:
-                    files = [os.path.join(entry.local_path, f"rg_{i:05d}.parquet") for i in want]
-                    df = self.spark.read.parquet(*files)
-                    with self._lock:
-                        self._counters["hits"] += 1
-                    return df
-                except Exception:
-                    if self.strict:
-                        raise CacheReadError(f"cached row-group read failed for {remote_path}")
-                    self.invalidate(key)
-                    with self._lock:
-                        self._counters["fallbacks"] += 1
-            else:
-                self.invalidate(key)
-        with self._lock:
-            self._counters["misses"] += 1
+                with self._lock:
+                    self._counters["fallbacks"] += 1
+                    self._counters["misses"] += 1
         if warm_on_miss and self.cacheable(remote_path) and not self.dummy:
             local = self.warm_row_groups(remote_path, want)
             if local is not None:
-                files = [os.path.join(local, f"rg_{i:05d}.parquet") for i in want]
-                return self.spark.read.parquet(*files)
+                return self.spark.read.parquet(*self._rg_files(local, want))
         self._remote_penalty()
         return self.spark.read.parquet(remote_path)
+
+    @staticmethod
+    def _rg_files(local: str, row_groups: list[int]) -> list[str]:
+        return [os.path.join(local, f"rg_{i:05d}.parquet") for i in row_groups]
 
     def read_range(self, remote_path: str, column: str, lo=None, hi=None, warm_on_miss: bool = True) -> DataFrame:
         """Predicate-driven cached read: prune row groups by footer stats, serve/warm
@@ -401,6 +379,25 @@ class CacheManager:
         return df
 
     # ------------------------------------------------------------------ read path
+    def _lookup(self, key: str, remote_path: str, covers=lambda entry: True) -> Entry | None:
+        """The hit test of both granularities: ``key``'s entry when it is within the
+        TTL, fresh against ``remote_path`` and ``covers`` the request (touched and
+        counted as a hit). An expired or stale entry is invalidated; every non-hit
+        counts a miss."""
+        entry = self.manifest.get(key)
+        if entry is not None:
+            expired = self.ttl_seconds is not None and time.time() - entry.last_access > self.ttl_seconds
+            if expired or not self._fresh(entry, remote_path):
+                self.invalidate(key)
+            elif covers(entry):
+                self.manifest.touch(key)
+                with self._lock:
+                    self._counters["hits"] += 1
+                return entry
+        with self._lock:
+            self._counters["misses"] += 1
+        return None
+
     def resolve(self, remote_path: str, warm_on_miss: bool = True) -> str:
         """RubiX's per-read routing (CachingInputStream.java:315-500, file granularity):
         returns the path a whole-file read should scan.
@@ -410,18 +407,9 @@ class CacheManager:
         queued, else a read-through warm (A6). The remote itself when warming is off,
         the path is gated, or the new copy was dropped.
         """
-        self._drain_trash()  # reclaim expired deferred deletes opportunistically
-        entry = self.manifest.get(remote_path)
+        entry = self._lookup(remote_path, remote_path)
         if entry is not None:
-            expired = self.ttl_seconds is not None and time.time() - entry.last_access > self.ttl_seconds
-            if not expired and self._fresh(entry, remote_path):
-                self.manifest.touch(remote_path)
-                with self._lock:
-                    self._counters["hits"] += 1
-                return entry.local_path
-            self.invalidate(remote_path)
-        with self._lock:
-            self._counters["misses"] += 1
+            return entry.local_path
         if warm_on_miss and self.cacheable(remote_path) and not self.dummy:
             local = self._fetch_from_peer(remote_path)
             if local is None and self._warmup is not None:
@@ -493,42 +481,12 @@ class CacheManager:
         expected = entry.remote_size if entry.remote_size is not None else entry.size_bytes
         return mtime == entry.last_modified and size == expected
 
-    # ------------------------------------------------------------------ two-phase delete
-    def _defer_delete(self, path: str) -> None:
-        """Phase-2 of eviction/invalidation: the entry leaves the manifest (and budget
-        accounting) IMMEDIATELY, but its files stay on disk for a grace period so an
-        in-flight Spark scan planned over the copy can finish — a scan resolves
-        absolute file paths at plan time, and unlinking them mid-read fails the whole
-        job (observed once in the sf1 eviction-stress phase as
-        FAILED_READ_FILE.FILE_NOT_EXIST when an eviction raced a concurrent reader).
-        Re-warms can never collide with a deferred dir: every warm commits under a
-        BUMPED generation into a fresh directory (warm(): next_generation). The grace
-        protects readers in THIS process; cross-process readers coordinate through the
-        manifest before planning (same bound as the reference's local block deletes).
-        """
-        with self._lock:
-            self._trash.append((time.time() + self._evict_grace_s, path))
-        self._drain_trash()
-
-    def _drain_trash(self, force: bool = False) -> None:
-        now = time.time()
-        with self._lock:
-            keep = [(due, p) for due, p in self._trash if not force and due > now]
-            drop = [p for due, p in self._trash if force or due <= now]
-            self._trash = keep
-        for p in drop:
-            shutil.rmtree(p, ignore_errors=True)
-
-    def flush_trash(self) -> None:
-        """Unlink all deferred deletes now (shutdown/test hook)."""
-        self._drain_trash(force=True)
-
     # ------------------------------------------------------------------ invalidation
     def invalidate(self, remote_path: str) -> None:
-        """Drop the cached copy and bump the generation (BookKeeper.invalidateFileMetadata)."""
+        """Drop the cached copy and bump the generation (BookKeeper.invalidateFileMetadata).
+        The manifest tombstones the copy's dir."""
         entry = self.manifest.remove(remote_path)
         if entry:
-            self._defer_delete(entry.local_path)
             self.manifest.next_generation(remote_path)
             self._df_memo.pop(entry.local_path, None)
             with self._lock:
@@ -538,8 +496,8 @@ class CacheManager:
     def evict_to_budget(self) -> int:
         """LRU eviction until under budget (Guava weigher analog, BookKeeper.java:656-686).
 
-        Deletion is two-phase (``_defer_delete``): manifest removal is immediate,
-        the unlink waits out a reader grace period."""
+        The entry leaves the budget at once; the manifest tombstones its dir, so the
+        unlink waits out ``Manifest.RECLAIM_GRACE`` for in-flight readers."""
         if self.budget_bytes is None:
             return 0
         evicted = 0
@@ -548,15 +506,13 @@ class CacheManager:
                 lru = min(self.manifest.entries(), key=lambda e: e.last_access, default=None)
                 if lru is None:
                     break
-                # defer the dir of the entry ACTUALLY removed, not the LRU snapshot's:
-                # a re-warm can commit a new generation between the snapshot and the
-                # remove, and deferring the snapshot's dir would leak the new
-                # generation's dir forever — unreachable by eviction AND validate()
-                # (TOCTOU found by the generated cache schedules, r13)
+                # remove() tombstones the dir of the entry ACTUALLY removed, not the
+                # LRU snapshot's: a re-warm can commit a new generation between the
+                # snapshot and the remove (TOCTOU found by the generated cache
+                # schedules, r13)
                 removed = self.manifest.remove(lru.remote_path)
                 if removed is None:
                     continue  # raced an invalidate; re-read total_bytes
-                self._defer_delete(removed.local_path)
                 self._df_memo.pop(removed.local_path, None)
                 evicted += 1
                 self._counters["evictions"] += 1
@@ -570,13 +526,14 @@ class CacheManager:
     def validate(self, repair: bool = True) -> dict:
         """Self-test sweep — A25 (CachingValidator / FileValidator analog).
 
-        Checks every manifest entry's local copy exists and is readable metadata-wise;
-        broken entries are invalidated (repair=True) so the next read falls back to
-        remote and re-warms. Also sweeps AGED orphan dirs — fcache dirs owned by no
-        live entry, tombstone, or pending trash (a process killed mid-warm leaves one;
-        no in-process failure path can cover that) — but only past a conservative age
-        so a concurrent manager's in-flight warm (dir exists, commit pending) is never
-        touched. Returns {checked, broken, repaired, orphans_swept}.
+        Checks every manifest entry's local copy exists and holds ``size_bytes``
+        bytes; broken entries are invalidated (repair=True) so the next read falls back
+        to remote and re-warms. With repair it also reclaims due tombstones, and sweeps
+        AGED orphan dirs — fcache dirs owned by no live entry or tombstone (a process
+        killed mid-warm leaves one; no in-process failure path can cover that) — but
+        only past a conservative age so a concurrent manager's in-flight warm (dir
+        exists, commit pending) is never touched. Returns {checked, broken, repaired,
+        orphans_swept}.
         """
         checked = broken = repaired = 0
         for entry in self.manifest.entries():
@@ -592,12 +549,11 @@ class CacheManager:
                     repaired += 1
         orphans_swept = 0
         if repair:
+            self.manifest.reclaim()
             owned = {e.local_path for e in self.manifest.entries()}
-            with self._lock:
-                owned.update(p for _, p in self._trash)
             with self.manifest._lock:
                 owned.update(self.manifest._tombstones)
-            min_age = max(self._evict_grace_s, Manifest.RECLAIM_GRACE) + 60.0
+            min_age = self.manifest.RECLAIM_GRACE + 60.0
             fcache = os.path.join(self.cache_dir, "fcache")
             now = time.time()
             for name in os.listdir(fcache):

@@ -13,6 +13,12 @@ The state is always CACHED (local copy valid), after the thrift ``Location`` enu
 Persistence is a JSON file next to the cached data, rewritten atomically; generation
 numbers survive restarts exactly like the ``_g<N>`` file suffixes
 (``rubix-spi/.../CacheUtil.java:162-167``).
+
+Every local dir that leaves the manifest — evicted, invalidated, or superseded by a
+newer commit — is tombstoned in the same locked save that drops it, and unlinked after
+``RECLAIM_GRACE`` by a later mutation: the one deferred delete of the cache, like the
+reference's single removal listener (``BookKeeper.java:723-746``). Being persisted, a
+tombstone outlives the process that wrote it, so a killed process leaks no dir.
 """
 
 from __future__ import annotations
@@ -60,6 +66,12 @@ class Manifest:
     (``BookKeeper.java:413-453`` semantics).  Readers detect out-of-band changes via a
     cheap stat signature and reload.
 
+    ``put``/``remove`` tombstone the dir of the entry they replace or drop instead of
+    deleting it: a reader in any process may still hold a lazy DataFrame over it (a
+    Spark scan resolves absolute file paths at plan time, and an unlink mid-scan fails
+    the job). Each ``put``/``remove`` sweeps the tombstones past their deadline;
+    ``reclaim()`` sweeps on demand.
+
     ``touch()`` (the per-cache-hit LRU timestamp) is in-memory with periodic flush —
     a synchronous whole-manifest rewrite per hit would throttle the read path at
     thousands of entries. Lost touches on crash or reload only age LRU ordering, never
@@ -68,10 +80,10 @@ class Manifest:
     """
 
     TOUCH_FLUSH_INTERVAL = 5.0  # seconds between touch-driven flushes
-    # superseded-generation dirs survive this long after being replaced, so a
-    # cross-process reader holding a lazy DataFrame over the previous generation can
-    # still run its action; reclaimed by the next structural mutation past the grace
-    RECLAIM_GRACE = 30.0
+    # a dir that left the manifest survives this long, so a reader holding a lazy
+    # DataFrame over it can still run its action; reclaimed by the next structural
+    # mutation past the grace
+    RECLAIM_GRACE = 60.0
 
     def __init__(self, path: str):
         self._path = path
@@ -80,7 +92,7 @@ class Manifest:
         # highest generation ever seen per remote path, even after eviction — a stale
         # writer can never resurrect an invalidated copy (FileMetadata.java:125-182)
         self._generations: dict[str, int] = {}
-        # superseded local dirs awaiting grace-period reclaim: {local_path: deadline}
+        # dropped local dirs awaiting grace-period reclaim: {local_path: deadline}
         self._tombstones: dict[str, float] = {}
         self._dirty_touches = 0
         self._last_flush = time.time()
@@ -191,40 +203,38 @@ class Manifest:
             prev = self._entries.get(entry.remote_path)
             self._entries[entry.remote_path] = entry
             # a superseded earlier-generation commit (another writer that raced and
-            # landed first) is unreachable via the manifest after this point, but a
-            # concurrent process may still hold a lazy DataFrame over its dir — so it
-            # is TOMBSTONED (reclaimed after RECLAIM_GRACE by a later mutation), not
-            # deleted here; in-flight cross-process readers of the immediately-previous
-            # generation survive their action
+            # landed first) is unreachable via the manifest after this point
             if prev is not None and prev.local_path != entry.local_path:
                 self._tombstones[prev.local_path] = time.time() + self.RECLAIM_GRACE
             self._sweep_tombstones_locked()
             self._save()
             return True
 
-    def _sweep_tombstones_locked(self, max_age: float | None = None) -> None:
-        """Reclaim tombstoned dirs past their grace deadline (caller holds both locks).
-
-        ``max_age=0`` forces immediate reclaim of everything (shutdown/test hook)."""
+    def _sweep_tombstones_locked(self, force: bool = False) -> bool:
+        """Unlink tombstoned dirs past their deadline, or all of them when ``force``
+        (caller holds both locks). Returns whether any was reclaimed."""
         now = time.time()
-        for path, deadline in list(self._tombstones.items()):
-            if max_age == 0 or now >= deadline:
-                shutil.rmtree(path, ignore_errors=True)
-                del self._tombstones[path]
+        due = [p for p, deadline in self._tombstones.items() if force or now >= deadline]
+        for path in due:
+            shutil.rmtree(path, ignore_errors=True)
+            del self._tombstones[path]
+        return bool(due)
 
     def reclaim(self, force: bool = False) -> None:
         """Sweep expired tombstones (``force=True`` ignores the grace period)."""
         with self._lock, self._file_lock():
             self._refresh_locked()
-            self._sweep_tombstones_locked(max_age=0 if force else None)
-            self._save()
+            if self._sweep_tombstones_locked(force):
+                self._save()
 
     def remove(self, remote_path: str) -> Entry | None:
+        """Drop ``remote_path``'s entry and tombstone its dir, in one locked save."""
         with self._lock, self._file_lock():
             self._refresh_locked()
             e = self._entries.pop(remote_path, None)
-            self._sweep_tombstones_locked()
-            if e:
+            if e is not None:
+                self._tombstones[e.local_path] = time.time() + self.RECLAIM_GRACE
+            if self._sweep_tombstones_locked() or e is not None:
                 self._save()
             return e
 

@@ -193,7 +193,12 @@ class CacheClient:
         self._sock = socket.create_connection((self.host, self.port), timeout=self.timeout_s)
         self._rfile = self._sock.makefile("rb")
 
-    def call(self, method: str, **params):
+    def _request(self, method: str, params: dict, receive=None, error=RuntimeError):
+        """The one request loop: (re)connect, send one request line, read the response
+        line, and hand an ok result to ``receive`` (which may read binary frames that
+        follow it). A transport failure — including a pooled connection the peer has
+        closed, seen as an empty line — closes the socket and retries with a short
+        backoff; a server-side error is raised as ``error`` and not retried."""
         last: Exception | None = None
         with self._lock:
             for attempt in range(self.retries):
@@ -206,56 +211,45 @@ class CacheClient:
                     if not line:
                         raise ConnectionError("server closed connection")
                     resp = json.loads(line)
-                    if not resp.get("ok"):
-                        raise RuntimeError(resp.get("error", "unknown server error"))
-                    return resp["result"]
-                except (OSError, ConnectionError, json.JSONDecodeError) as exc:
+                    if resp.get("ok"):
+                        return receive(resp["result"]) if receive else resp["result"]
+                except (OSError, json.JSONDecodeError) as exc:
                     last = exc
                     self.close()
                     time.sleep(0.05 * (attempt + 1))
+                    continue
+                raise error(resp.get("error", "unknown server error"))
         raise ConnectionError(f"cache server unreachable after {self.retries} tries: {last}")
+
+    def call(self, method: str, **params):
+        return self._request(method, params)
 
     def fetch(self, path: str, dest_dir: str) -> dict:
         """Download the peer's CACHED copy of ``path`` into ``dest_dir`` (A8/A9: the
         non-local read chain — LocalDataTransferServer serving a neighbor's blocks).
-        Returns the fetch header (files, generation, remote size/mtime). Raises on a
-        peer miss; the caller falls back to the remote."""
-        last: Exception | None = None
-        with self._lock:
-            for attempt in range(self.retries):
-                try:
-                    if self._sock is None:
-                        self._connect()
-                    msg = json.dumps({"method": "fetch", "params": {"path": path}}) + "\n"
-                    self._sock.sendall(msg.encode())
-                    resp = json.loads(self._rfile.readline() or b"{}")
-                    if not resp.get("ok"):
-                        raise FileNotFoundError(resp.get("error", "peer fetch failed"))
-                    header = resp["result"]
-                    os.makedirs(dest_dir, exist_ok=True)
-                    for f in header["files"]:
-                        name = os.path.normpath(f["name"])
-                        if os.path.isabs(name) or name.split(os.sep)[0] == "..":
-                            self.close()  # the unread frames would desync the stream
-                            raise ValueError(f"peer sent a path outside the copy: {f['name']!r}")
-                        dest = os.path.join(dest_dir, name)
-                        os.makedirs(os.path.dirname(dest), exist_ok=True)
-                        remaining = f["size"]
-                        with open(dest, "wb") as out:
-                            while remaining:
-                                chunk = self._rfile.read(min(remaining, 1 << 20))
-                                if not chunk:
-                                    raise ConnectionError("peer stream truncated")
-                                out.write(chunk)
-                                remaining -= len(chunk)
-                    return header
-                except FileNotFoundError:
-                    raise  # a genuine peer miss — no point retrying
-                except (OSError, ConnectionError, json.JSONDecodeError) as exc:
-                    last = exc
-                    self.close()
-                    time.sleep(0.05 * (attempt + 1))
-        raise ConnectionError(f"peer unreachable after {self.retries} tries: {last}")
+        Returns the fetch header (files, generation, remote size/mtime). Raises
+        ``FileNotFoundError`` on a peer miss; the caller falls back to the remote."""
+
+        def receive(header: dict) -> dict:
+            os.makedirs(dest_dir, exist_ok=True)
+            for f in header["files"]:
+                name = os.path.normpath(f["name"])
+                if os.path.isabs(name) or name.split(os.sep)[0] == "..":
+                    self.close()  # the unread frames would desync the stream
+                    raise ValueError(f"peer sent a path outside the copy: {f['name']!r}")
+                dest = os.path.join(dest_dir, name)
+                os.makedirs(os.path.dirname(dest), exist_ok=True)
+                remaining = f["size"]
+                with open(dest, "wb") as out:
+                    while remaining:
+                        chunk = self._rfile.read(min(remaining, 1 << 20))
+                        if not chunk:
+                            raise ConnectionError("peer stream truncated")
+                        out.write(chunk)
+                        remaining -= len(chunk)
+            return header
+
+        return self._request("fetch", {"path": path}, receive, error=FileNotFoundError)
 
     def close(self) -> None:
         try:

@@ -4,8 +4,8 @@ cache layer, the way test_adversarial_relational.py generated warehouse edges.
 The hand-enumerated cache tests are green, but r12 proved generated edges find what
 enumeration misses (11 defects in one pass). Here the generator draws random
 schedules over the cache op grammar — warm / row-group warm / invalidate (either
-granularity) / evict / remote rewrite / behind-the-back dir loss / trash flush /
-validate — and checks the CONTRACT invariants after every step:
+granularity) / evict / remote rewrite / behind-the-back dir loss / forced tombstone
+reclaim / validate — and checks the CONTRACT invariants after every step:
 
   I1 serve-fresh correctness: any CACHED entry that passes the freshness signature
      and whose files are readable must hold exactly the remote content it claims
@@ -13,8 +13,8 @@ validate — and checks the CONTRACT invariants after every step:
      documented corruption-fallback path, never an accepted wrong answer.
   I2 budget: manifest bytes <= budget after any op that ends in evict_to_budget.
   I3 generation monotonicity: the per-key generation high-water never decreases.
-  I4 end-state hygiene: after flush_trash + tombstone reclaim, every fcache dir is
-     a live entry's dir (no orphans), and validate() leaves zero broken entries.
+  I4 end-state hygiene: after a forced tombstone reclaim, every fcache dir is a
+     live entry's dir (no orphans), and validate() leaves zero broken entries.
 
 Layers: sequential seeded schedules (semantics), thread storms on one manager
 (in-process races: invalidate-during-warm, evict-during-read), process storms on a
@@ -130,13 +130,11 @@ def _check_generations(cm: CacheManager, high: dict) -> None:
 
 
 def _check_endstate(cm: CacheManager, paths: list[str]) -> None:
-    """I4: repaired clean, no orphan dirs after trash flush + tombstone reclaim."""
-    cm.flush_trash()
+    """I4: repaired clean, no orphan dirs after a forced tombstone reclaim."""
     cm.manifest.reclaim(force=True)
     rep = cm.validate(repair=True)
     again = cm.validate(repair=False)
     assert again["broken"] == 0, (rep, again)
-    cm.flush_trash()
     cm.manifest.reclaim(force=True)
     live = {e.local_path for e in cm.manifest.entries()}
     fcache = os.path.join(cm.cache_dir, "fcache")
@@ -154,7 +152,7 @@ def _one_op(cm: CacheManager, paths: list[str], rng: random.Random, salt: list) 
     p = rng.choice(paths)
     op = rng.choice(
         ["warm", "warm", "warm", "warm_rg", "warm_rg", "invalidate",
-         "invalidate_rg", "evict", "rewrite", "flush", "validate", "break_dir"]
+         "invalidate_rg", "evict", "rewrite", "reclaim", "validate", "break_dir"]
     )
     if op == "warm":
         cm.warm(p)
@@ -171,8 +169,8 @@ def _one_op(cm: CacheManager, paths: list[str], rng: random.Random, salt: list) 
     elif op == "rewrite":
         salt[0] += 1
         _write_remote(p, rng.choice([300, 500, 800, 1100]), salt=salt[0])
-    elif op == "flush":
-        cm.flush_trash()
+    elif op == "reclaim":
+        cm.manifest.reclaim(force=True)
     elif op == "validate":
         cm.validate(repair=True)
     elif op == "break_dir":
@@ -209,7 +207,7 @@ def test_generated_sequential_schedules(remotes, tmp_path, seed):
     one_file = os.path.getsize(remotes[-1])
     cm = CacheManager(None, str(tmp_path / f"cache{seed}"),
                       budget_bytes=int(one_file * 1.7))
-    cm._evict_grace_s = 0.05 if seed % 3 == 0 else 60.0  # grace boundary variety
+    cm.manifest.RECLAIM_GRACE = 0.05 if seed % 3 == 0 else 60.0  # grace boundary variety
     _run_schedule(cm, remotes, random.Random(1000 + seed), n_ops=25)
     _check_endstate(cm, remotes)
 
@@ -222,7 +220,7 @@ def test_generated_thread_storm(remotes, tmp_path, seed):
     so one dedicated reader thread re-checks it continuously."""
     cm = CacheManager(None, str(tmp_path / f"cache{seed}"),
                       budget_bytes=int(os.path.getsize(remotes[-1]) * 2.2))
-    cm._evict_grace_s = 60.0
+    cm.manifest.RECLAIM_GRACE = 60.0
     stop = threading.Event()
     errs: list = []
 
@@ -258,7 +256,7 @@ def _proc_schedule(cache_dir: str, paths: list[str], wseed: int, q) -> None:
     try:
         cm = CacheManager(None, cache_dir,
                           budget_bytes=int(os.path.getsize(paths[-1]) * 2.2))
-        cm._evict_grace_s = 0.05
+        cm.manifest.RECLAIM_GRACE = 0.05
         rng = random.Random(wseed)
         for _ in range(10):
             p = rng.choice(paths)
@@ -272,7 +270,7 @@ def _proc_schedule(cache_dir: str, paths: list[str], wseed: int, q) -> None:
                 cm.invalidate(p)
             else:
                 cm.evict_to_budget()
-        cm.flush_trash()
+        cm.manifest.reclaim(force=True)
         q.put(None)
     except Exception as e:  # pragma: no cover - the defect path
         q.put(repr(e))
@@ -309,26 +307,29 @@ def test_generated_process_storm(remotes, tmp_path, seed):
 
 
 def test_grace_window_boundary(remotes, tmp_path):
-    """Two-phase eviction edge: with a live grace, a reader holding the resolved
-    local path across an invalidate can still read its bytes; at grace 0 the files
-    are gone by the next drain. Either way the manifest entry vanishes instantly."""
+    """Tombstone edge: with a live grace, a reader holding the resolved local path
+    across an invalidate can still read its bytes, and an unforced reclaim keeps
+    them; at grace 0 the files are gone by the next reclaim. Either way the manifest
+    entry vanishes instantly."""
     p = remotes[0]
     cm = CacheManager(None, str(tmp_path / "cache"))
-    cm._evict_grace_s = 60.0
+    cm.manifest.RECLAIM_GRACE = 60.0
     local = cm.warm(p)
     assert local and os.path.isdir(local)
     cm.invalidate(p)
-    assert cm.manifest.get(p) is None  # phase 1: immediate metadata removal
-    got = _read_dir(local)             # phase 2 pending: in-flight reader survives
+    assert cm.manifest.get(p) is None  # immediate metadata removal
+    assert local in cm.manifest._tombstones
+    cm.manifest.reclaim()              # inside the grace: in-flight reader survives
+    got = _read_dir(local)
     assert _canon(got) == _canon(pq.read_table(p))
-    cm.flush_trash()
+    cm.manifest.reclaim(force=True)
     assert not os.path.isdir(local)
 
     cm2 = CacheManager(None, str(tmp_path / "cache2"))
-    cm2._evict_grace_s = 0.0
+    cm2.manifest.RECLAIM_GRACE = 0.0
     local2 = cm2.warm(p)
     cm2.invalidate(p)
-    cm2._drain_trash()
+    cm2.manifest.reclaim()
     assert not os.path.isdir(local2)
 
 
@@ -357,7 +358,7 @@ def test_peer_fetch_of_just_evicted_entry(remotes, tmp_path):
         def status_then_evict(path):
             st = real_status(path)
             client.invalidate(path)     # the race: eviction lands after the status
-            srv.manager.flush_trash()
+            srv.manager.manifest.reclaim(force=True)
             return st
 
         client.get_cache_status = status_then_evict
@@ -387,7 +388,7 @@ def test_rowgroup_subset_vs_whole_file_overlap(remotes, tmp_path):
     and invalidating one never harms the other."""
     p = remotes[2]  # 1000 rows, 10 row groups
     cm = CacheManager(None, str(tmp_path / "cache"))
-    cm._evict_grace_s = 0.0
+    cm.manifest.RECLAIM_GRACE = 0.0
 
     sub = cm.warm_row_groups(p, [1, 3])
     whole = cm.warm(p)

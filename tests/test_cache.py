@@ -91,8 +91,8 @@ def test_eviction_under_budget(spark, remote_dir, tmp_path):
 def test_eviction_is_two_phase_for_inflight_readers(spark, remote_dir, tmp_path):
     """A reader holding a DataFrame planned over a cached copy must survive that
     copy's eviction (r6: eviction unlinking files mid-scan failed a concurrent sf1
-    stress reader with FAILED_READ_FILE). Manifest removal is immediate; the unlink
-    waits out a grace period, and flush_trash() reclaims the disk."""
+    stress reader with FAILED_READ_FILE). Manifest removal is immediate; the dir is
+    tombstoned for a grace period, and a forced reclaim frees the disk."""
     cm = CacheManager(spark, str(tmp_path / "cache"))
     path = f"{remote_dir}/nation.parquet"
     expected = _rows(cm.read(path))
@@ -103,7 +103,7 @@ def test_eviction_is_two_phase_for_inflight_readers(spark, remote_dir, tmp_path)
     assert cm.manifest.get(path) is None  # logically gone (budget accounting)
     assert _rows(df) == expected  # in-flight reader still completes
     assert os.path.isdir(entry.local_path)  # files held by the grace period
-    cm.flush_trash()
+    cm.manifest.reclaim(force=True)
     assert not os.path.isdir(entry.local_path)  # reclaimed on demand
 
 

@@ -57,3 +57,21 @@ def test_validate_repairs_and_evict_respects_budget(remote, tmp_path):
 
     out = main(["evict", "--cache-dir", cache, "--budget", "1"])
     assert out["evicted"] == 1 and out["total_bytes"] == 0
+
+
+def test_invalidate_and_evict_tombstone_their_dirs(remote, tmp_path):
+    """Each CLI call is a short-lived manager: the dirs that invalidate and evict drop
+    must be recorded in the manifest, so a later reclaim frees the disk."""
+    cache = str(tmp_path / "cache")
+    n, r = f"{remote}/nation.parquet", f"{remote}/region.parquet"
+    warmed = main(["warm", "--cache-dir", cache, n, r])["warmed"]
+    main(["invalidate", "--cache-dir", cache, n])
+    main(["evict", "--cache-dir", cache, "--budget", "1"])
+
+    from rubix_spark.cache.manifest import Manifest
+
+    m = Manifest(os.path.join(cache, "manifest.json"))
+    assert set(m._tombstones) == {warmed[n], warmed[r]}
+    assert all(os.path.isdir(d) for d in warmed.values())  # still inside the grace
+    m.reclaim(force=True)
+    assert os.listdir(os.path.join(cache, "fcache")) == []

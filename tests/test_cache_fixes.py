@@ -108,7 +108,7 @@ def test_collated_fetch_reads_once_per_run(spark, multi_rg_file, tmp_path, monke
 
 def test_self_evicted_copy_is_not_returned(multi_rg_file, tmp_path):
     """With a 1-byte budget every new copy is evicted by its own commit: no producer
-    may return its path (it is unlinked after the grace period)."""
+    may return its path (its dir is tombstoned, unlinked after the grace period)."""
     from rubix_spark.cache.server import CacheClient, CacheServer
 
     cm = CacheManager(None, str(tmp_path / "cache"), budget_bytes=1)

@@ -6,6 +6,7 @@ parquet's natural block size, plus the batched-touch manifest behavior.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 import pyarrow as pa
@@ -72,6 +73,20 @@ def test_subset_grows_incrementally_and_serves_covered_requests(spark, multi_rg_
     # uncovered request → miss, warms the union
     _rows(cm.read_row_groups(multi_rg_file, [0, 3]))
     assert cm.manifest.get(cm._rg_key(multi_rg_file)).row_groups == [0, 2, 3, 7]
+    s = cm.stats()
+    assert s["misses"] == 1 and s["invalidations"] == 0  # fresh subset: merged, not dropped
+
+
+def test_lost_subset_falls_back_and_rewarms(spark, multi_rg_file, tmp_path):
+    """A subset whose files vanished behind the manifest passes the hit test, fails to
+    plan, and is re-routed: one hit, one fallback, one miss — as for a whole file."""
+    cm = CacheManager(spark, str(tmp_path / "cache"))
+    shutil.rmtree(cm.warm_row_groups(multi_rg_file, [2, 3]))
+    got = _rows(cm.read_row_groups(multi_rg_file, [2, 3]))
+    assert got == [(i, i * 2) for i in range(200, 400)]
+    s = cm.stats()
+    assert (s["hits"], s["fallbacks"], s["misses"], s["invalidations"]) == (1, 1, 1, 1)
+    assert os.path.isdir(cm.manifest.get(cm._rg_key(multi_rg_file)).local_path)
 
 
 def test_stale_remote_invalidates_subset(spark, multi_rg_file, tmp_path):

@@ -8,6 +8,8 @@ cross-engine serving path, coordinated through the flock'd manifest)."""
 from __future__ import annotations
 
 import json
+import os
+import socket
 import subprocess
 import sys
 
@@ -93,6 +95,31 @@ def test_client_retries_reach_late_server(tmp_path):
         assert c.ping()["pong"]
         c._sock.close()  # sever the pooled connection behind the client's back
         assert c.ping()["pong"]  # retry path reconnects transparently
+        c.close()
+    finally:
+        srv.shutdown()
+
+
+def test_fetch_retries_a_pooled_connection_the_peer_closed(tmp_path):
+    """A pooled socket whose far end has shut down reads as an empty response line:
+    ``fetch`` must reconnect and retry like every other call, not report a miss."""
+    srv = CacheServer(str(tmp_path / "cache"))
+    srv.serve_background()
+    try:
+        c = CacheClient(*srv.address)
+        p = f"{SF_SMOKE}/nation.parquet"
+        assert c.warm(p)["local_path"]
+        for request in (lambda: c.get_cache_status(p)["state"],
+                        lambda: c.fetch(p, str(tmp_path / "copy"))["size_bytes"]):
+            near, far = socket.socketpair()
+            far.shutdown(socket.SHUT_WR)  # the peer's side is done: reads see EOF
+            c.close()
+            c._sock, c._rfile = near, near.makefile("rb")
+            assert request()
+            far.close()
+        assert c._sock is not near  # the dead socket was dropped, not reused
+        assert sum(os.path.getsize(os.path.join(r, f)) for r, _, fs in os.walk(tmp_path / "copy")
+                   for f in fs) == os.path.getsize(p)
         c.close()
     finally:
         srv.shutdown()

@@ -127,9 +127,10 @@ def test_superseded_generation_survives_grace_period(remote_file, tmp_path):
     a.warm(remote_file)
     new = a.manifest.get(remote_file)
     assert new.generation > old.generation
+    assert os.path.isdir(old.local_path)  # B's reader survives the invalidate too
 
-    # warm went through invalidate (immediate rmtree, the acknowledged hazard); the
-    # put-commit path is what grace covers — simulate a raced superseding commit:
+    # the invalidate tombstoned generation 1's dir; a raced superseding commit is
+    # tombstoned by the put itself:
     from rubix_spark.cache.manifest import Entry
 
     g = a.manifest.next_generation(remote_file)
@@ -147,4 +148,4 @@ def test_superseded_generation_survives_grace_period(remote_file, tmp_path):
     a.manifest.reclaim()  # grace not yet expired → still alive
     assert os.path.isdir(new.local_path)
     a.manifest.reclaim(force=True)
-    assert not os.path.isdir(new.local_path)
+    assert not os.path.isdir(new.local_path) and not os.path.isdir(old.local_path)
